@@ -58,64 +58,21 @@ def scan_partitions(df: DataFrame, memo_key: str | None = None) -> int:
     return df.rdd.getNumPartitions()
 
 
-# Parquet footer row-count memo (same stable-scan contract as the partition
-# memo: a path whose files are rewritten mid-session must not be read
-# through this). The footer read is driver-side metadata only (~1 ms) —
-# the same class of fact AQE reads from file statistics, never data.
-_PARQUET_ROWS_MEMO: dict[str, int] = {}
+def narrow_scan(df: DataFrame, memo_key: str | None = None) -> bool:
+    """True in the small-scan regime: ``df`` yields fewer partitions than
+    the session's default parallelism (at the bench SFs every table is one
+    file with one row group). The one predicate every regime branch asks;
+    ``memo_key`` and the probe constraint are :func:`scan_partitions`'s."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return scan_partitions(df, memo_key) < par
 
 
-def parquet_rows(path: str) -> int:
-    """Total row count of a parquet file (or directory of files) from the
-    FOOTER metadata — no Spark job, no data read. Used to size small-scan
-    fan-out targets by data volume instead of core count."""
-    n = _PARQUET_ROWS_MEMO.get(path)
-    if n is None:
-        import os
-
-        import pyarrow.parquet as pq
-
-        if os.path.isdir(path):
-            n = sum(
-                pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-                for root, _, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        else:
-            n = pq.ParquetFile(path).metadata.num_rows
-        _PARQUET_ROWS_MEMO[path] = n
-    return n
-
-
-def ensure_min_parallelism(
-    df: DataFrame,
-    memo_key: str | None = None,
-    rows_per_task: int | None = None,
-    rows_fn=None,
-) -> DataFrame:
+def ensure_min_parallelism(df: DataFrame, memo_key: str | None = None) -> DataFrame:
     """Repartition ``df`` to the session default parallelism iff its current
     partitioning is narrower — the row-group-bound small-file guard. The
     round-robin repartition is deterministic (Spark sorts within input
     partitions before distributing) and every caller's downstream
     aggregation is partitioning-independent, so results never change.
-
-    ``rows_per_task`` (with ``rows_fn`` returning the input's row count,
-    e.g. :func:`parquet_rows` on the scan path) sizes the fan-out target
-    by DATA VOLUME instead of core count: target = clamp(ceil(rows /
-    rows_per_task), current, defaultParallelism). A warm mapInPandas
-    stage costs ~0.3 s fixed + ~12-15 ms per task on top of the Python
-    compute (measured r16; the driver-side dispatch component is
-    serialized), so a gate whose per-doc Python work is trivial
-    (~0.01-0.1 ms: WARC envelope parse, sitemap/robots text, archive
-    member walks) is OVERHEAD-bound at a blanket defaultParallelism
-    fan-out — 5 000 fixture docs across 32 tasks pay ~0.65 s of stage
-    plumbing to parallelize ~0.15 s of compute (crawl_discovery A/B:
-    3.17 s -> 1.34 s at target 5). Callers with heavy per-doc work
-    (codec pixel/sample decode, HTML extraction, PDF decrypt — ms-class
-    per doc) omit it and keep the full fan-out. The target never drops
-    below the scan's own partitioning, and at production scale the
-    guard stays a no-op either way.
 
     ``memo_key``: callers probing a STABLE scan (same path, same session)
     many times pass a key naming it, and the partition-count probe runs
@@ -130,13 +87,6 @@ def ensure_min_parallelism(
     frames only — ``.rdd`` on a plan that still contains exchanges
     materializes those shuffle stages eagerly at DataFrame-BUILD time
     under AQE, turning a plan probe into real job cost."""
-    n = scan_partitions(df, memo_key)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if n >= par:
+    if not narrow_scan(df, memo_key):
         return df
-    target = par
-    if rows_per_task is not None and rows_fn is not None:
-        target = max(n, min(par, -(-int(rows_fn()) // rows_per_task)))
-    if target <= n:
-        return df
-    return df.repartition(target)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

@@ -441,6 +441,24 @@ def tar_members(
     return df.mapInPandas(mapper, schema)
 
 
+def _schema_names(schema: str) -> list[str]:
+    """Column names of a DDL schema string, in order. Splits on TOP-LEVEL
+    commas only: decimal(p,s) / struct<...> / map<...> field types legally
+    contain commas, and a naive split would mis-derive the column list
+    and fail only at executor runtime."""
+    fields, depth, start = [], 0, 0
+    for i, ch in enumerate(schema):
+        if ch in "(<":
+            depth += 1
+        elif ch in ")>":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            fields.append(schema[start:i])
+            start = i + 1
+    fields.append(schema[start:])
+    return [f.strip().split()[0] for f in fields]
+
+
 def _binary_meta_source(
     df: DataFrame,
     content_col: str,
@@ -470,21 +488,7 @@ def _binary_meta_source(
     import pandas as pd
 
     schema = f"{id_col} long, {schema_tail}, parse_ok boolean"
-    # split on TOP-LEVEL commas only — decimal(p,s) / struct<...> /
-    # map<...> field types legally contain commas (review finding:
-    # a naive split would mis-derive the dead-letter width and fail
-    # only at executor runtime)
-    fields, depth, start = [], 0, 0
-    for i, ch in enumerate(schema):
-        if ch in "(<":
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            fields.append(schema[start:i])
-            start = i + 1
-    fields.append(schema[start:])
-    names = [f.strip().split()[0] for f in fields]
+    names = _schema_names(schema)
     n_vals = len(names) - 2  # between id and parse_ok
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

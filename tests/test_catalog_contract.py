@@ -83,3 +83,32 @@ def test_every_catalog_query_is_benched_or_excluded():
     assert not (head & excluded), sorted(head & excluded)
     uncovered = catalog - head - excluded
     assert not uncovered, sorted(uncovered)
+
+
+# The only top-level functions in queries/catalog_sources.py that may keep
+# the hand-rolled `for pdf in batches` mapInPandas skeleton, each with the
+# reason catalog_sources._per_doc (one output tuple per input row) cannot
+# express it. Every other fixture gate goes through _per_doc.
+_SKELETON_ALLOWED = {
+    "_per_doc": "the helper itself",
+    "adpcm_audio_stats": "batch-vectorized: one numpy encode/decode per Arrow batch",
+    "cdx_recrawl_diff": "multi-row: each doc emits up to two snapshot captures",
+}
+
+
+def test_fixture_gates_use_per_doc_helper():
+    import ast
+
+    path = Path(__file__).resolve().parents[1] / (
+        "data_engineering_assignment_spark/queries/catalog_sources.py"
+    )
+    src = path.read_text()
+    hand_rolled = {
+        node.name
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef)
+        and "for pdf in batches" in ast.get_source_segment(src, node)
+    }
+    assert hand_rolled <= set(_SKELETON_ALLOWED), sorted(
+        hand_rolled - set(_SKELETON_ALLOWED)
+    )

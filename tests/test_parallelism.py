@@ -1,7 +1,7 @@
 """Small-file parallelism guard + scan-regime probe (operators/parallelism).
 
 The r16 fan-out pipelines gate checkpoint EAGERNESS on the scan regime
-(queries.catalog_sources._fixture_scan_small): lazy at bench SFs where the
+(operators.parallelism.narrow_scan): lazy at bench SFs where the
 fan-out legs are too short to race, eager at scale where concurrent
 broadcast-build jobs race to compute a lazy checkpoint's partitions. These
 tests pin the probe semantics both layers depend on.
@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from data_engineering_assignment_spark.operators.parallelism import (
     _PART_COUNT_MEMO,
     ensure_min_parallelism,
+    narrow_scan,
     scan_partitions,
 )
 
@@ -55,12 +56,14 @@ def test_ensure_min_parallelism_noop_when_wide(spark):
     assert ensure_min_parallelism(wide) is wide
 
 
-def test_fixture_scan_small_regime(spark, sf_dir):
-    from data_engineering_assignment_spark.queries.catalog_sources import (
-        _fixture_scan_small,
-    )
+def test_narrow_scan_regime(spark, sf_dir):
+    from data_engineering_assignment_spark.tables import load
 
+    docs = load(spark, sf_dir, "documents").select("doc_id")
     # the committed test SFs are single-row-group files: always the small
     # regime (this is what keeps the fan-out pipelines' checkpoints LAZY
     # under the driver's bench)
-    assert _fixture_scan_small(spark, sf_dir) is True
+    assert narrow_scan(docs, memo_key=f"doc_ids:{sf_dir}") is True
+    # a frame already at the default parallelism is not narrow
+    target = spark.sparkContext.defaultParallelism
+    assert narrow_scan(spark.range(100, numPartitions=target)) is False

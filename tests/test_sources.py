@@ -358,3 +358,44 @@ def test_zip_members_zip64(spark):
         )
         assert got == [("a.bin", 1000, True), ("b.txt", 10, True)]
     assert len(by_id[3]) == 1 and not by_id[3][0]["parse_ok"]
+
+
+def test_schema_names_split_on_top_level_commas():
+    schema = (
+        "id long, price decimal(10,2), s struct<a:int,b:int>,"
+        " m map<string,int>, parse_ok boolean"
+    )
+    assert sources._schema_names(schema) == ["id", "price", "s", "m", "parse_ok"]
+
+
+def test_per_doc_zero_rows_keeps_schema(spark):
+    from data_engineering_assignment_spark.queries.catalog_sources import _per_doc
+
+    empty = spark.range(0).select("id")
+    out = _per_doc(empty, lambda i: (i, "x"), "doc_id long, tag string")
+    assert out.columns == ["doc_id", "tag"]
+    assert out.collect() == []
+
+
+def test_per_doc_passes_python_scalars_in_column_order(spark):
+    from data_engineering_assignment_spark.queries.catalog_sources import _per_doc
+
+    docs = spark.createDataFrame([(7, "seven"), (8, "eight")], "doc_id long, text string")
+
+    def fn(did, text):
+        # Python scalars, not numpy ones: type() is exact
+        return (did, type(did).__name__, type(text).__name__, f"{did}:{text}")
+
+    rows = _per_doc(docs, fn, "doc_id long, t_id string, t_text string, both string")
+    assert sorted(tuple(r) for r in rows.collect()) == [
+        (7, "int", "str", "7:seven"),
+        (8, "int", "str", "8:eight"),
+    ]
+
+
+def test_per_doc_preserves_row_order_within_partition(spark):
+    from data_engineering_assignment_spark.queries.catalog_sources import _per_doc
+
+    docs = spark.range(50, numPartitions=1).selectExpr("49 - id AS doc_id")
+    out = _per_doc(docs, lambda did: (did * 10,), "v long")
+    assert [r["v"] for r in out.collect()] == [10 * (49 - i) for i in range(50)]
