@@ -4,16 +4,17 @@ triangle counting, over graphs derived from the relational tables.
 Both algorithms are written for Spark's execution model AND for exact
 cross-engine verification:
 
-- **PageRank** (Page et al. 1999) runs the standard edge-join/aggregate
-  power iteration — but in INTEGER arithmetic: ranks are scaled longs, the
-  damping redistribution is ``(rank * 17) div (20 * deg)`` (damping 0.85 as
-  the exact rational 17/20, integral floor division). Floor division of
-  positive longs is bit-identical on every engine, so a step-unrolled SQL
-  oracle reproduces the ranks EXACTLY — no float drift across iterations,
-  no transcendental re-derivation (the CLAUDE.md libm invariant). Each
-  iteration is one shuffle join (ranks x out-edges) plus one aggregation —
-  the textbook distributed plan — with ``localCheckpoint`` truncating the
-  k-deep lineage (the BPE/k-means loop discipline).
+- **PageRank** (Page et al. 1999) runs the power iteration in INTEGER
+  arithmetic: ranks are scaled longs, the damping redistribution is
+  ``(rank * 17) div (20 * deg)`` (damping 0.85 as the exact rational
+  17/20, integral floor division). Floor division of positive longs is
+  bit-identical on every engine, so a step-unrolled SQL oracle reproduces
+  the ranks EXACTLY — no float drift across iterations, no transcendental
+  re-derivation (the no-libm invariant). The edge list is built
+  ONCE into a per-node adjacency list (src, nbrs, deg), localCheckpointed;
+  each iteration joins it one-row-per-node against the ranks, computes
+  the node's contribution once, explodes it over ``nbrs`` and sums per
+  receiving node. Both join sides are node-sized, not edge-sized.
 - **Triangle counting** uses the degree-ordered orientation (Schank 2007;
   Suri & Vassilvitskii 2011): orient each undirected edge from its
   lower-(degree, id) endpoint to the higher one, then count directed wedges
@@ -86,13 +87,47 @@ def part_pair_edges(
     return pairs if keep_count else pairs.select("u", "v")
 
 
+# Iterative loops cut their carried state every this many iterations:
+# each checkpoint is a full job barrier, and a few chained join+agg stages
+# plan fine — only deep loops need the lineage cut (measured: per-iteration
+# checkpointing cost ~2x wall on a 3-iteration PageRank).
+_CHECKPOINT_EVERY = 4
+
+
+def _adjacency(edges: DataFrame) -> DataFrame:
+    """(src, nbrs, deg): the per-node neighbour list of an UNDIRECTED
+    (u, v) edge list, un-checkpointed (plan tests read its full shape).
+
+    Each edge is doubled in-row by one ``explode(array(struct(u, v),
+    struct(v, u)))`` so the edge source is read ONCE: a ``unionAll`` of
+    the two projections plans the source subtree once per branch, and
+    Catalyst infers a different ``isnotnull`` filter per branch, which
+    keeps ReuseExchange from merging the copies. ``collect_list`` (never
+    ``collect_set``) keeps duplicate edges and both arcs of a self-loop, so
+    ``deg`` is the multigraph degree; the list's order is nondeterministic,
+    but every consumer sums longs over it, which is order-free.
+    """
+    arcs = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("u").alias("src"), F.col("v").alias("dst")),
+                F.struct(F.col("v").alias("src"), F.col("u").alias("dst")),
+            )
+        ).alias("arc")
+    ).select("arc.src", "arc.dst")
+    return (
+        arcs.groupBy("src")
+        .agg(F.collect_list("dst").alias("nbrs"))
+        .select("src", "nbrs", F.size("nbrs").cast("long").alias("deg"))
+    )
+
+
 def pagerank_integer(
     edges: DataFrame,
     iters: int = 3,
     scale: int = 10**12,
     damp_num: int = 17,
     damp_den: int = 20,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """(node, pr) after ``iters`` integer power iterations.
 
@@ -101,33 +136,46 @@ def pagerank_integer(
     pr_{i+1}(v) = base + sum_{u~v} (pr_i(u) * damp_num)
                                      div (damp_den * deg(u))
     with base = scale * (damp_den - damp_num) div damp_den. All longs, all
-    floor division — bit-identical to the unrolled SQL oracle.
+    floor division — bit-identical to the unrolled SQL oracle. Duplicate
+    edges and self-loops count with multiplicity (multigraph semantics).
+
+    Hub bound: a node's neighbour list is ONE row of ~8 bytes per
+    neighbour, so a hub of degree d is a d*8-byte row held whole by one
+    task in the adjacency build, the checkpoint and every iteration's
+    explode (10^6 neighbours ~ 8 MB; size executors for the largest hub).
     """
-    bi = edges.select("u", "v").unionAll(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    deg = bi.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-    # (src, dst, src_deg): the loop's static side, materialized once.
-    # The checkpoint LOOKS like a ReusedExchange-rule violation (identical
-    # subtree per iteration, one action) but is load-bearing: AQE converts
-    # the per-iteration ranks joins to BROADCASTs at runtime, and each
-    # broadcast build re-evaluates its whole un-checkpointed input — the
-    # bloom_decontaminate wide-fanout effect. r16 measured the removal:
-    # the edge build (join+distinct) physically re-ran 5x, 12.7 -> 49.6 s
-    # task time, 3.2 -> 7.6 s wall on copurchase_pagerank. Keep the cut.
-    ed = bi.join(deg, "u").select(
-        F.col("u").alias("src"), F.col("v").alias("dst"), "deg"
-    )
-    ed = ed.localCheckpoint(eager=False)
+    # The adjacency list is the loop's static side, materialized once. The
+    # cut LOOKS like a ReusedExchange-rule violation (identical subtree per
+    # iteration, one action) but is load-bearing: AQE converts the
+    # per-iteration joins to BROADCASTs at runtime, and each broadcast
+    # build re-evaluates its whole un-checkpointed input — r16 measured
+    # the edge build (join+distinct) physically re-running 5x without it
+    # (12.7 -> 49.6 s task time, 3.2 -> 7.6 s wall on copurchase_pagerank).
+    # Measured alternatives, perfbench jvm_mix steady pass on 4 vCPUs
+    # (this form ~3.4-3.8 s): persist() instead of the cut 6.9 s; no cut
+    # 6.1 s; repartition(n, src) before the cut 4.4 s (one more stage);
+    # explode doubling into a (src, dst, deg) edge-list cut instead of
+    # adj only ~10% under the unionAll edge list. Eager and lazy cuts of
+    # adj measure within noise (with AQE on, a lazy cut of an aggregate
+    # already runs its shuffle map stages when the cut is taken).
+    adj = _adjacency(edges).localCheckpoint(eager=False)
 
     base = scale * (damp_den - damp_num) // damp_den
-    ranks = ed.select(F.col("src").alias("node")).distinct().select(
-        "node", F.lit(scale).cast("long").alias("pr")
+    # adj has one row per node, so it seeds the ranks without a distinct
+    ranks = adj.select(
+        F.col("src").alias("node"), F.lit(scale).cast("long").alias("pr")
     )
     for i in range(iters):
-        contrib = ed.join(ranks, ed.src == ranks.node).select(
-            F.col("dst").alias("node"),
-            F.expr(f"(pr * {damp_num}) div ({damp_den} * deg)").alias("c"),
+        # one row per node on both join sides; each node's contribution
+        # is computed once, then fanned out to its neighbours (the explode
+        # is a Generate boundary, so it is not re-derived per arc)
+        contrib = (
+            adj.join(ranks, adj.src == ranks.node)
+            .select(
+                "nbrs",
+                F.expr(f"(pr * {damp_num}) div ({damp_den} * deg)").alias("c"),
+            )
+            .select(F.explode("nbrs").alias("node"), "c")
         )
         # every node of an undirected graph has an in-edge, so the
         # aggregation covers all nodes — no dangling-mass special case
@@ -136,11 +184,7 @@ def pagerank_integer(
             .agg(F.sum("c").alias("inflow"))
             .select("node", (F.lit(base) + F.col("inflow")).alias("pr"))
         )
-        # checkpoint PERIODICALLY, not per iteration: each checkpoint is a
-        # full job barrier, and a few chained join+agg stages plan fine —
-        # only deep loops need the lineage cut (measured: per-iteration
-        # checkpointing cost ~2x wall at 3 iterations)
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < iters:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
@@ -383,7 +427,6 @@ def sssp_rounds(
     edges: DataFrame,
     sources: DataFrame,
     rounds: int = 4,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Multi-source shortest paths by ``rounds`` synchronous Bellman-Ford
     relaxations → (node, dist): the minimum total edge weight over paths
@@ -407,14 +450,13 @@ def sssp_rounds(
     Each round is one equi-join frontier⋈edges plus a map-side-combinable
     ``groupBy(node).min`` and an anti-ish left join to split out the
     improved rows; distance + frontier are checkpointed every
-    ``checkpoint_every`` rounds (job-barrier tradeoff documented at
-    :func:`pagerank_integer`). All longs, no floats — parallel-path ties
-    resolve identically on any engine.
+    ``_CHECKPOINT_EVERY`` rounds (the job-barrier tradeoff). All longs, no
+    floats — parallel-path ties resolve identically on any engine.
     """
     bi = edges.select("u", "v", "w").unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
     )
-    # checkpointed for the same reason as pagerank_integer's ed: AQE
+    # checkpointed for the same reason as pagerank_integer's adj: AQE
     # broadcast builds per round re-evaluate un-checkpointed inputs (r16
     # measured the removal at 2x the edge-build task time, 16 -> 23 jobs)
     bi = bi.localCheckpoint(eager=False)
@@ -451,7 +493,7 @@ def sssp_rounds(
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < rounds:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and (i + 1) < rounds:
             dist = dist.localCheckpoint(eager=False)
             frontier = frontier.localCheckpoint(eager=False)
     return dist

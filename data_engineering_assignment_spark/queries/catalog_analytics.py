@@ -1061,10 +1061,12 @@ def _pagerank_oracle(iters: int, scale: int, dn: int, dd: int) -> str:
     "pagerank_integer) over the undirected customer—supplier trading "
     "graph: 3 power iterations with damping 17/20 in scaled-long floor "
     "division — bit-identical to the step-unrolled SQL oracle, no float "
-    "drift across iterations. Each iteration is one shuffle join + one "
-    "aggregation with localCheckpointed lineage (the k-means/BPE loop "
-    "discipline); top-20 by (pr, node) total order plans as "
-    "TakeOrderedAndProject.",
+    "drift across iterations. The orders⋈lineitem edge build runs once "
+    "into a localCheckpointed per-node adjacency list (in-row explode "
+    "doubling, collect_list neighbours); each iteration joins it "
+    "one-row-per-node against the ranks, explodes each node's "
+    "contribution over its neighbours and sums per node. Top-20 by "
+    "(pr, node) total order plans as TakeOrderedAndProject.",
 )
 def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graphs import (

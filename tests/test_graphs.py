@@ -39,15 +39,25 @@ def _model_pagerank(pairs, iters, scale=10**12, dn=17, dd=20):
 def test_pagerank_matches_python_model(spark):
     rng = random.Random(3)
     nodes = [f"n{i}" for i in range(12)]
-    pairs = sorted(
+    simple = sorted(
         {tuple(sorted(rng.sample(nodes, 2))) for _ in range(25)}
     )
-    for iters in (1, 3):
-        got = {
-            r.node: r.pr
-            for r in pagerank_integer(_edges(spark, pairs), iters=iters).collect()
-        }
-        assert got == _model_pagerank(pairs, iters), iters
+    # a duplicate (u, v), its reverse (v, u) and a self-loop each count
+    # with multiplicity in the degree and the inflow — a collect_set or a
+    # distinct slipped into the adjacency build would drop them
+    multi = [
+        ("a", "b"), ("a", "b"), ("b", "a"), ("c", "c"),
+        ("a", "c"), ("b", "d"), ("d", "e"),
+    ]
+    for pairs in (simple, multi):
+        for iters in (1, 3):
+            got = {
+                r.node: r.pr
+                for r in pagerank_integer(
+                    _edges(spark, pairs), iters=iters
+                ).collect()
+            }
+            assert got == _model_pagerank(pairs, iters), (pairs, iters)
 
 
 def test_pagerank_star_hub_ranks_highest(spark):
@@ -59,6 +69,49 @@ def test_pagerank_star_hub_ranks_highest(spark):
     assert pr["hub"] > max(v for k, v in pr.items() if k != "hub")
     # leaves are symmetric: identical integer ranks, no float jitter
     assert len({v for k, v in pr.items() if k != "hub"}) == 1
+
+
+def test_pagerank_partition_invariant(spark):
+    """Ranks are sums of longs, so neither the shuffle partition count nor
+    AQE (coalescing, runtime broadcast conversion) can move them."""
+    rng = random.Random(17)
+    nodes = [f"n{i}" for i in range(30)]
+    pairs = [tuple(rng.sample(nodes, 2)) for _ in range(70)]
+    want = _model_pagerank(pairs, 3)
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    prev = {k: spark.conf.get(k) for k in keys}
+    try:
+        for parts, aqe in (("1", "true"), ("200", "true"), ("4", "false")):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+            got = {
+                r.node: r.pr
+                for r in pagerank_integer(_edges(spark, pairs), iters=3).collect()
+            }
+            assert got == want, (parts, aqe)
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def test_adjacency_reads_edge_source_once(spark, sf_dir):
+    """The un-checkpointed adjacency build doubles edges in-row: the
+    orders⋈lineitem edge build is planned once, with no Union (a unionAll
+    of two projections plans it once per branch)."""
+    from data_engineering_assignment_spark.operators.graphs import (
+        _adjacency,
+        copurchase_edges,
+    )
+    from data_engineering_assignment_spark.tables import load
+
+    edges = copurchase_edges(
+        load(spark, sf_dir, "orders"), load(spark, sf_dir, "lineitem")
+    )
+    plan = _adjacency(edges)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Relation [") == 2, plan
+    assert plan.count("Relation [o_orderkey") == 1, plan
+    assert plan.count("Relation [l_orderkey") == 1, plan
+    assert "Union" not in plan, plan
 
 
 def _model_triangles(pairs):
